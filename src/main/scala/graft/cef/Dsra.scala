@@ -45,7 +45,8 @@ package graft.cef
 final class DsraRun(
     cp: CompiledPattern,
     val partition: String,
-    maxConfigs: Int = DsraRun.DefaultMaxConfigs) extends Serializable {
+    maxConfigs: Int = DsraRun.DefaultMaxConfigs)
+    extends KeyedRun[DsraRunState, Detection] with Serializable {
   require(cp.window > 0,
     "the DSRA path needs a window ({window:N}{windowType:count|time}) — an unwindowed " +
       "register pattern keeps every taken configuration alive forever; use the " +

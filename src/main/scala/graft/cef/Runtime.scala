@@ -20,6 +20,19 @@ final case class MatchOut(
     firstTimestamp: Long,
     lastTimestamp: Long)
 
+/** The per-key runtime contract the keyed drivers of `graft.cef.spark`
+  * run: one instance per key, [[restore]]d from the previous micro-batch's
+  * snapshot (streaming only), stepped over the key's events in
+  * (timestamp, id) order, then [[snapshot]]ted. `step` returns any
+  * collection, so a runtime whose step yields an `Option` or a `List`
+  * implements it as is.
+  */
+trait KeyedRun[S, +O] {
+  def restore(s: S): Unit
+  def snapshot: S
+  def step(e: CEvent): IterableOnce[O]
+}
+
 /** Deterministic run over the streaming SDFA — the inner loop of the keyed
   * stateful operator (reference fsm/runtime/Run.scala:161-300 processEventDet).
   *
@@ -32,7 +45,8 @@ final case class MatchOut(
   * Mutable by design: one instance per partition key lives inside
   * mapPartitions / flatMapGroupsWithState state.
   */
-final class DetRun(cp: CompiledPattern, val partition: String) extends Serializable {
+final class DetRun(cp: CompiledPattern, val partition: String)
+    extends KeyedRun[DetRunState, Detection] with Serializable {
   private val sdfa = cp.sdfa
   private var state: Int = sdfa.start
   private var counter: Long = 0L
@@ -104,7 +118,8 @@ final case class DetRunState(state: Int, counter: Long, minCounter: Long, minTs:
 final class MatchRun(
     cp: CompiledPattern,
     val partition: String,
-    maxThreads: Int = MatchRun.DefaultMaxThreads) extends Serializable {
+    maxThreads: Int = MatchRun.DefaultMaxThreads)
+    extends KeyedRun[MatchRunState, MatchOut] with Serializable {
   private val nfa = cp.snfa
   private var threads: List[MatchRun.Thread] = Nil
   private var counter: Long = 0L

@@ -198,18 +198,37 @@ final case class ForecastOut(
   * precomputed forecast table (reference ForecasterRun.scala:58-120 wired
   * into WayebEngine.java:432-470). Emits a forecast after every event once
   * the buffer holds a full context (SPST warm-up, Run.scala:305-460), and
-  * detections whenever the SDFA hits a final state.
+  * detections whenever the SDFA hits a final state. Its state (DetRun
+  * 4-tuple + symbol buffer) snapshots and restores, and its model swaps in
+  * place — what keyed streaming state needs (reference snapshot:
+  * WayebEngine.java:276-287).
   */
 final class SpstRun(
     cp: CompiledPattern,
-    spst: Spst,
-    table: Map[(List[Int], Int), ForecastInterval],
+    private var spst: Spst,
+    private var table: Map[(List[Int], Int), ForecastInterval],
     val partition: String) extends Serializable {
 
   private val det = new DetRun(cp, partition)
-  private val buffer = new SymbolBuffer(math.max(1, spst.order))
+  private var buffer = new SymbolBuffer(math.max(1, spst.order))
 
+  def detSnapshot: DetRunState = det.snapshot
+  def bufferSnapshot: Seq[Int] = buffer.snapshot
   def eventCounter: Long = det.eventCounter
+  def restore(d: DetRunState, buf: Seq[Int]): Unit = { det.restore(d); buffer.restore(buf) }
+
+  /** Swap the model; the symbol buffer survives (SPST warm-up across swaps,
+    * reference Run.scala:305-460 + SURVEY.md §7.4). The snapshot is
+    * most-recent-first; SymbolBuffer.restore keeps the newest `size`
+    * symbols on overflow, so it is passed unchanged.
+    */
+  def swapModel(newSpst: Spst, newTable: Map[(List[Int], Int), ForecastInterval]): Unit = {
+    val keep = buffer.snapshot
+    spst = newSpst
+    table = newTable
+    buffer = new SymbolBuffer(math.max(1, newSpst.order))
+    buffer.restore(keep)
+  }
 
   def step(e: CEvent): (Option[Detection], Option[ForecastOut]) = {
     if (e.isReset) { det.reset(); buffer.clear(); return (None, None) }

@@ -1,8 +1,9 @@
 package graft.cef.spark
 
 import graft.cef._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
+import scala.language.implicitConversions
 
 /** Batch pattern detection over DataFrames — the Spark-native face of the
   * CEF engine (reference wiring: InferenceJob.java:215-216 keyBy(mmsi) →
@@ -92,41 +93,20 @@ object Detect {
   }
 
   /** Detection points from the deterministic streaming-SDFA runtime. */
-  def detections(events: Dataset[CEvent], cp: CompiledPattern): Dataset[Detection] =
-    perKeyScan(events)(key => new DetRun(cp, key))((run, e) => run.step(e).iterator)
-
-  /** Narrow-ingest face of [[detections]] — the batch scan pays the
-    * generic Map decode once per row, and dropping it measures 1.5x
-    * (2.28 → 3.37 M ev/s over 4M events, SCALE.md round-13).
-    */
-  def detections(events: EventStream, cp: CompiledPattern): Dataset[Detection] =
-    perKeyScanNarrow(events)(key => new DetRun(cp, key))((run, e) => run.step(e).iterator)
+  def detections(events: Ingest, cp: CompiledPattern): Dataset[Detection] =
+    perKeyScan(events)(freshRuns(new DetRun(cp, _)))
 
   /** Multi-pattern detection (a `&`-separated pattern file, docs/lang.md):
     * one pass over the data drives ALL automata per key — the reference's
     * run pool registered per (fsmId, partition value)
     * (ERFEngine.scala:230-266). Output rows carry the pattern index.
     */
-  def detectionsMulti(
-      events: Dataset[CEvent],
-      cps: Seq[CompiledPattern]): Dataset[(Int, Detection)] = {
+  def detectionsMulti(events: Ingest, cps: Seq[CompiledPattern]): Dataset[(Int, Detection)] = {
     implicit val enc: Encoder[(Int, Detection)] =
       Encoders.tuple(Encoders.scalaInt, detEnc)
-    perKeyScan(events)(key => cps.map(cp => new DetRun(cp, key)).toArray) {
-      (runs, e) => runs.iterator.zipWithIndex.flatMap {
-        case (run, fsmId) => run.step(e).map(fsmId -> _)
-      }
-    }
-  }
-
-  /** Narrow-ingest face of [[detectionsMulti]]. */
-  def detectionsMulti(
-      events: EventStream,
-      cps: Seq[CompiledPattern]): Dataset[(Int, Detection)] = {
-    implicit val enc: Encoder[(Int, Detection)] =
-      Encoders.tuple(Encoders.scalaInt, detEnc)
-    perKeyScanNarrow(events)(key => cps.map(cp => new DetRun(cp, key)).toArray) {
-      (runs, e) => runs.iterator.zipWithIndex.flatMap {
+    perKeyScan(events) { key =>
+      val runs = cps.map(cp => new DetRun(cp, key)).toArray
+      e => runs.iterator.zipWithIndex.flatMap {
         case (run, fsmId) => run.step(e).map(fsmId -> _)
       }
     }
@@ -137,12 +117,8 @@ object Detect {
     * detection points with a bounded per-key configuration population —
     * the forecast-ready alternative to match enumeration.
     */
-  def detectionsDsra(events: Dataset[CEvent], cp: CompiledPattern): Dataset[Detection] =
-    perKeyScan(events)(key => new DsraRun(cp, key))((run, e) => run.step(e).iterator)
-
-  /** Narrow-ingest face of [[detectionsDsra]]. */
-  def detectionsDsra(events: EventStream, cp: CompiledPattern): Dataset[Detection] =
-    perKeyScanNarrow(events)(key => new DsraRun(cp, key))((run, e) => run.step(e).iterator)
+  def detectionsDsra(events: Ingest, cp: CompiledPattern): Dataset[Detection] =
+    perKeyScan(events)(freshRuns(new DsraRun(cp, _)))
 
   /** SPSTm symbolization of the DSRA runtime (T1/F2 for register
     * patterns): one row per event carrying the runtime's deterministic
@@ -164,73 +140,19 @@ object Detect {
     * keeps the small state space the wt recursion needs while the
     * window itself stays exact in the runtime.
     */
-  def dsraTrace(
-      events: Dataset[CEvent],
-      cp: CompiledPattern,
-      grid: Long = 0L): Dataset[DsraStep] = {
+  def dsraTrace(events: Ingest, cp: CompiledPattern, grid: Long = 0L): Dataset[DsraStep] = {
     implicit val stepEnc: Encoder[DsraStep] = Encoders.product[DsraStep]
-    perKeyScan(events)(key => new DsraRun(cp, key))(dsraStepFn(cp, grid))
-  }
-
-  /** Narrow-ingest face of [[dsraTrace]]. */
-  def dsraTrace(events: EventStream, cp: CompiledPattern): Dataset[DsraStep] =
-    dsraTrace(events, cp, 0L)
-  def dsraTrace(events: EventStream, cp: CompiledPattern, grid: Long): Dataset[DsraStep] = {
-    implicit val stepEnc: Encoder[DsraStep] = Encoders.product[DsraStep]
-    perKeyScanNarrow(events)(key => new DsraRun(cp, key))(dsraStepFn(cp, grid))
-  }
-
-  /** One owner for the per-event symbolization rule (both scan shapes). */
-  private def dsraStepFn(
-      cp: CompiledPattern, grid: Long): (DsraRun, CEvent) => Iterator[DsraStep] = {
-    val timeWindowed = cp.windowKind == WindowKind.Time
-    val cells: Long =
-      if (!timeWindowed) {
-        require(grid == 0L, "grid applies to time-windowed patterns (count age is exact)")
-        cp.window
-      } else {
-        require(grid > 0L, "time-windowed symbolization needs a positive age grid (micros)")
-        require(cp.window % grid == 0L,
-          s"grid $grid must tile the window ${cp.window} exactly")
-        cp.window / grid
-      }
-    require(cells >= 2, s"anchor-age abstraction needs >=2 cells, got $cells")
-    (run, e) =>
-      if (e.isReset) { run.step(e); Iterator.empty }
-      else {
-        val det = run.step(e)
-        val counter = run.eventCounter
-        val anchor = run.newestTakenAnchor
-        // arming = the runtime fired a first-TAKE at this step (explicit
-        // signal — anchor/timestamp equality would misclassify a non-arming
-        // event whose event time ties an earlier same-ts anchor)
-        val fresh = run.tookAnchorThisStep
-        val sym =
-          if (det.isDefined) SpstM.SymD
-          else if (fresh) SpstM.SymA
-          else SpstM.SymO
-        val state =
-          if (anchor < 0) cells
-          else if (timeWindowed) math.min((e.timestamp - anchor) / grid, cells)
-          else math.min(counter - anchor, cells)
-        Iterator.single(DsraStep(run.partition, counter, e.id, sym, state.toInt))
-      }
+    perKeyScan(events)(freshRuns(SpstmSymbolizer.perKey(cp, grid)))
   }
 
   /** Full match enumeration from the nondeterministic runtime.
     * `maxThreads` caps the per-key thread pool (MatchRun population guard).
     */
   def matches(
-      events: Dataset[CEvent],
+      events: Ingest,
       cp: CompiledPattern,
       maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] =
-    perKeyScan(events)(key => new MatchRun(cp, key, maxThreads))((run, e) => run.step(e).iterator)
-
-  /** Narrow-ingest face of [[matches]]. */
-  def matches(events: EventStream, cp: CompiledPattern): Dataset[MatchOut] =
-    matches(events, cp, MatchRun.DefaultMaxThreads)
-  def matches(events: EventStream, cp: CompiledPattern, maxThreads: Int): Dataset[MatchOut] =
-    perKeyScanNarrow(events)(key => new MatchRun(cp, key, maxThreads))((run, e) => run.step(e).iterator)
+    perKeyScan(events)(freshRuns(new MatchRun(cp, _, maxThreads)))
 
   /** MonoRun fast path for the reference opt engine's regime
     * (ERFOptEngine.scala:91-287): a SINGLE pattern with NO partition
@@ -250,77 +172,106 @@ object Detect {
     * exists for parity with the reference's single-run throughput mode.
     */
   def matchesMono(
-      events: Dataset[CEvent],
+      events: Ingest,
       cp: CompiledPattern,
-      maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] =
-    events.coalesce(1)
+      maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] = {
+    val rebuild = events.rebuild
+    events.rows.coalesce(1)
       .sortWithinPartitions(col("timestamp"), col("id"))
       .mapPartitions { rows =>
-        if (MonoRun.eligible(cp)) MonoRun.run(cp, rows, maxThreads)
-        else {
-          val run = new MatchRun(cp, "", maxThreads)
-          rows.flatMap(run.step)
-        }
-      }
-
-  /** Narrow-ingest face of [[matchesMono]]. */
-  def matchesMono(events: EventStream, cp: CompiledPattern): Dataset[MatchOut] =
-    matchesMono(events, cp, MatchRun.DefaultMaxThreads)
-  def matchesMono(events: EventStream, cp: CompiledPattern, maxThreads: Int): Dataset[MatchOut] =
-    events.ds.coalesce(1)
-      .sortWithinPartitions(col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        val evs = rows.map(events.rebuild)
+        val evs = rows.map(rebuild)
         if (MonoRun.eligible(cp)) MonoRun.run(cp, evs, maxThreads)
         else {
           val run = new MatchRun(cp, "", maxThreads)
           evs.flatMap(run.step)
         }
       }
+  }
 
-  /** Shuffle by key, external-sort by (key, ts, id), stream per-key runs. */
-  private def perKeyScan[R, O: Encoder](events: Dataset[CEvent])(
-      mkRun: String => R)(stepFn: (R, CEvent) => Iterator[O]): Dataset[O] = {
-    events
+  /** The one per-key batch scan (the scale design above): shuffle by key,
+    * external-sort by (key, ts, id), then one pass that rebuilds each
+    * CEvent once and steps it through its key's stepper, built when the
+    * key first appears.
+    */
+  private[spark] def perKeyScan[O: Encoder](events: Ingest)(
+      stepper: String => CEvent => IterableOnce[O]): Dataset[O] = {
+    val rebuild = events.rebuild
+    events.rows
       .repartition(col("partition"))
       .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
       .mapPartitions { rows =>
         var currentKey: String = null
-        var run: R = null.asInstanceOf[R]
-        rows.flatMap { e =>
+        var step: CEvent => IterableOnce[O] = null
+        rows.flatMap { row =>
+          val e = rebuild(row)
           if (e.partition != currentKey) {
             currentKey = e.partition
-            run = mkRun(currentKey)
+            step = stepper(currentKey)
           }
-          stepFn(run, e)
+          step(e)
         }
       }
   }
 
-  /** The same shuffle-once + external-sort + single-pass scan over the
-    * narrow ingest: the Catalyst sort keys are identical, and the CEvent
-    * is rebuilt exactly once per row inside the pass (the batch path
-    * paid the generic Map decode once per row — dropping it measures
-    * 1.5x end-to-end; the streaming path paid it 2-3x, see
-    * [[Stream.narrowByKey]]).
-    */
-  private def perKeyScanNarrow[R, O: Encoder](es: EventStream)(
-      mkRun: String => R)(stepFn: (R, CEvent) => Iterator[O]): Dataset[O] = {
-    es.ds
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var currentKey: String = null
-        var run: R = null.asInstanceOf[R]
-        rows.flatMap { ne =>
-          val e = es.rebuild(ne)
-          if (e.partition != currentKey) {
-            currentKey = e.partition
-            run = mkRun(currentKey)
-          }
-          stepFn(run, e)
-        }
+  /** A fresh keyed run per key as a [[perKeyScan]] stepper: a batch scan
+    * sees each key once, so nothing is restored or snapshotted. */
+  private[spark] def freshRuns[O](mkRun: String => KeyedRun[_, O]): String => CEvent => IterableOnce[O] =
+    key => { val run = mkRun(key); run.step(_) }
+}
+
+/** The SPSTm symbolizer of [[Detect.dsraTrace]] and
+  * [[Stream.forecastsSpstm]]: a [[DsraRun]] whose every non-reset event
+  * yields its symbol and anchor-age state.
+  */
+private[spark] final class SpstmSymbolizer private (
+    cp: CompiledPattern, grid: Long, cells: Long, key: String)
+    extends KeyedRun[DsraRunState, DsraStep] {
+
+  private val run = new DsraRun(cp, key)
+  private val timeWindowed = cp.windowKind == WindowKind.Time
+
+  def restore(s: DsraRunState): Unit = run.restore(s)
+  def snapshot: DsraRunState = run.snapshot
+
+  def step(e: CEvent): Option[DsraStep] =
+    if (e.isReset) { run.step(e); None }
+    else {
+      val det = run.step(e)
+      val counter = run.eventCounter
+      val anchor = run.newestTakenAnchor
+      // arming = the runtime fired a first-TAKE at this step (explicit
+      // signal — anchor/timestamp equality would misclassify a non-arming
+      // event whose event time ties an earlier same-ts anchor)
+      val sym =
+        if (det.isDefined) SpstM.SymD
+        else if (run.tookAnchorThisStep) SpstM.SymA
+        else SpstM.SymO
+      val state =
+        if (anchor < 0) cells
+        else if (timeWindowed) math.min((e.timestamp - anchor) / grid, cells)
+        else math.min(counter - anchor, cells)
+      Some(DsraStep(key, counter, e.id, sym, state.toInt))
+    }
+}
+
+private[spark] object SpstmSymbolizer {
+
+  /** The symbolizer of each key for `cp` and `grid`, checked once on the
+    * driver. The anchor-age cells are the window for count windows and
+    * the window over `grid` for time windows. */
+  def perKey(cp: CompiledPattern, grid: Long): String => SpstmSymbolizer = {
+    val cells =
+      if (cp.windowKind != WindowKind.Time) {
+        require(grid == 0L, "grid applies to time-windowed patterns (count age is exact)")
+        cp.window
+      } else {
+        require(grid > 0L, "time-windowed symbolization needs a positive age grid (micros)")
+        require(cp.window % grid == 0L,
+          s"grid $grid must tile the window ${cp.window} exactly")
+        cp.window / grid
       }
+    require(cells >= 2, s"anchor-age abstraction needs >=2 cells, got $cells")
+    new SpstmSymbolizer(cp, grid, cells, _)
   }
 }
 
@@ -346,13 +297,98 @@ final case class EventStream(
     numNames: Array[String],
     strNames: Array[String]) {
 
-  def rebuild(n: NEvent): CEvent = {
+  def rebuild(n: NEvent): CEvent =
+    Ingest.event(n.id, n.eventType, n.timestamp, n.partition, numNames, n.numV, strNames, n.strV)
+}
+
+/** Shuffle-side representation of a `Dataset[CEvent]` row: the attr maps
+  * as parallel key/value arrays. Rebuilt to CEvent once per row,
+  * post-shuffle.
+  */
+private[spark] final case class NarrowEvent(
+    id: Long,
+    eventType: String,
+    timestamp: Long,
+    partition: String,
+    numK: Array[String],
+    numV: Array[Double],
+    strK: Array[String],
+    strV: Array[String])
+
+/** The input of every per-key driver ([[Detect.perKeyScan]],
+  * [[Stream.keyed]]) and the one place that picks the row shape they
+  * shuffle. The batch scan sorts on Catalyst columns and decodes each row
+  * once, after the shuffle, so it takes [[rows]] as they come. A keyed
+  * streaming operator's key closure decodes each row before the exchange
+  * as well, so it groups the [[narrow]] rows, which carry no attr maps:
+  *  - a `Dataset[CEvent]` narrows to its attr maps as parallel key/value
+  *    ARRAY columns ([[NarrowEvent]], a Catalyst-side map_keys/map_values
+  *    projection, no JVM objects). Grouping `Dataset[CEvent]` itself pays
+  *    Catalyst's generic Map deserializer per row on BOTH sides of the
+  *    exchange — measured at ~2.4x the whole streaming steady state
+  *    (SCALE.md round-13 throughput table: 0.52 -> 1.24 M ev/s at a 4M
+  *    batch);
+  *  - an [[EventStream]] is narrow already: its rows hold only the value
+  *    arrays and its attr names ride in the rebuild closure, so the
+  *    shuffle moves strictly primitive-ish columns. The batch scan over it
+  *    measures 1.5x the `Dataset[CEvent]` one (2.28 → 3.37 M ev/s over 4M
+  *    events, SCALE.md round-13).
+  * Both convert implicitly, so each runtime takes one `Ingest` parameter.
+  */
+sealed abstract class Ingest {
+  type Row
+  private[spark] def rows: Dataset[Row]
+  /** Row → CEvent, run once per row after the shuffle; captures at most
+    * the attr-name arrays. */
+  private[spark] def rebuild: Row => CEvent
+  private[spark] def narrow: Ingest.Narrow
+}
+
+object Ingest {
+
+  /** Rows without attr maps, grouped by a closure over the row. */
+  sealed abstract class Narrow extends Ingest {
+    private[spark] def byKey: KeyValueGroupedDataset[String, Row]
+    private[spark] def narrow: Narrow = this
+  }
+
+  implicit def fromEvents(events: Dataset[CEvent]): Ingest = new Ingest {
+    type Row = CEvent
+    val rows: Dataset[CEvent] = events
+    val rebuild: CEvent => CEvent = e => e
+    def narrow: Narrow = new Narrow {
+      type Row = NarrowEvent
+      val rows: Dataset[NarrowEvent] = events.toDF().select(
+        col("id"), col("eventType"), col("timestamp"), col("partition"),
+        map_keys(col("num")).as("numK"), map_values(col("num")).as("numV"),
+        map_keys(col("str")).as("strK"), map_values(col("str")).as("strV"))
+        .as[NarrowEvent](Encoders.product[NarrowEvent])
+      val rebuild: NarrowEvent => CEvent =
+        n => event(n.id, n.eventType, n.timestamp, n.partition, n.numK, n.numV, n.strK, n.strV)
+      def byKey = rows.groupByKey((n: NarrowEvent) => n.partition)(Encoders.STRING)
+    }
+  }
+
+  implicit def fromStream(events: EventStream): Ingest = new Narrow {
+    type Row = NEvent
+    val rows: Dataset[NEvent] = events.ds
+    val rebuild: NEvent => CEvent = {
+      val (numNames, strNames) = (events.numNames, events.strNames)
+      n => event(n.id, n.eventType, n.timestamp, n.partition, numNames, n.numV, strNames, n.strV)
+    }
+    def byKey = rows.groupByKey((n: NEvent) => n.partition)(Encoders.STRING)
+  }
+
+  private[spark] def event(
+      id: Long, eventType: String, timestamp: Long, partition: String,
+      numK: Array[String], numV: Array[Double],
+      strK: Array[String], strV: Array[String]): CEvent = {
     var num = Map.empty[String, Double]
     var i = 0
-    while (i < numNames.length) { num = num.updated(numNames(i), n.numV(i)); i += 1 }
+    while (i < numK.length) { num = num.updated(numK(i), numV(i)); i += 1 }
     var str = Map.empty[String, String]
     i = 0
-    while (i < strNames.length) { str = str.updated(strNames(i), n.strV(i)); i += 1 }
-    CEvent(n.id, n.eventType, n.timestamp, n.partition, num, str)
+    while (i < strK.length) { str = str.updated(strK(i), strV(i)); i += 1 }
+    CEvent(id, eventType, timestamp, partition, num, str)
   }
 }

@@ -27,91 +27,40 @@ object Stream {
 
   implicit private val detEnc: Encoder[Detection] = Encoders.product[Detection]
   implicit private val matchEnc: Encoder[MatchOut] = Encoders.product[MatchOut]
-  implicit private val stringEnc: Encoder[String] = Encoders.STRING
+  implicit private val forecastEnc: Encoder[ForecastOut] = Encoders.product[ForecastOut]
   implicit private val detStateEnc: Encoder[DetRunState] = Encoders.product[DetRunState]
   implicit private val matchStateEnc: Encoder[MatchRunState] = Encoders.product[MatchRunState]
-  implicit private[spark] val narrowEnc: Encoder[NarrowEvent] = Encoders.product[NarrowEvent]
+  implicit private val dsraStateEnc: Encoder[DsraRunState] = Encoders.product[DsraRunState]
+  implicit private val spstStateEnc: Encoder[SpstStreamState] = Encoders.product[SpstStreamState]
+  implicit private val spstmStateEnc: Encoder[SpstmStreamState] =
+    Encoders.product[SpstmStreamState]
 
-  /** Every stateful op shuffles NARROW rows — the CEvent attr maps ride
-    * as parallel key/value ARRAY columns (a Catalyst-side map_keys/
-    * map_values projection, no JVM objects) and the CEvent is rebuilt
-    * exactly once per row after the shuffle. Shuffling `Dataset[CEvent]`
-    * directly pays Catalyst's generic Map deserializer per row on BOTH
-    * sides of the exchange (key extraction map-side, group iteration
-    * reduce-side) — measured at ~2.4x the whole steady-state path
-    * (SCALE.md round-13 throughput table: 0.52 -> 1.24 M ev/s at a 4M
-    * batch). The groupByKey key closure reads only `partition` from the
-    * narrow row, whose primitive-array decode is cheap.
-    */
-  private[spark] def narrowByKey(events: Dataset[CEvent]) = {
-    import org.apache.spark.sql.functions.{col, map_keys, map_values}
-    events.toDF().select(
-      col("id"), col("eventType"), col("timestamp"), col("partition"),
-      map_keys(col("num")).as("numK"), map_values(col("num")).as("numV"),
-      map_keys(col("str")).as("strK"), map_values(col("str")).as("strV"))
-      .as[NarrowEvent]
-      .groupByKey(_.partition)
-  }
-
-  /** The faster keyed entry: an [[EventStream]] never carried maps at
-    * all — its per-row key arrays don't exist (names live in the
-    * closure), so the shuffle moves strictly primitive-ish columns.
-    */
-  private def narrowByKey(events: EventStream) = {
-    implicit val nEnc: Encoder[NEvent] = Encoders.product[NEvent]
-    events.ds.groupByKey(_.partition)
-  }
-
-  /** One group's rows → (timestamp, id)-sorted CEvents (the intra-batch
-    * total order automaton determinism requires), rebuilt post-shuffle.
-    */
-  private def sortedEvents[E](rows: Iterator[E], rebuild: E => CEvent): Array[CEvent] = {
-    val arr = rows.map(rebuild).toArray
-    java.util.Arrays.sort(arr, (a: CEvent, b: CEvent) => {
-      val c = java.lang.Long.compare(a.timestamp, b.timestamp)
-      if (c != 0) c else java.lang.Long.compare(a.id, b.id)
-    })
-    arr
-  }
-
-  /** Deterministic detection-point stream (R1 over the streaming SDFA).
+  /** The one keyed streaming driver: per key and micro-batch, a run is
+    * built, restored from GroupState, stepped over the key's events in
+    * (timestamp, id) order, and snapshotted back.
     *
     * `stateTtl` (milliseconds, 0 = keep forever) expires idle keys — the
     * Spark analogue of the reference's run-pool expiration GC
     * (`expirationDeadline`, ERFEngine.scala:95-101, RunPool.scala:186;
     * SURVEY.md §2.3 K5): a key that receives no events for the TTL loses
-    * its run state and restarts from the automaton's start state.
+    * its run state and restarts from the run's initial state.
     */
-  def detections(
-      events: Dataset[CEvent],
-      cp: CompiledPattern,
-      stateTtl: Long = 0L): Dataset[Detection] =
-    detectionsImpl(narrowByKey(events), NarrowEvent.rebuild _, cp, stateTtl)
-
-  /** [[EventStream]] (narrow-ingest) face of [[detections]]. */
-  def detections(events: EventStream, cp: CompiledPattern): Dataset[Detection] =
-    detectionsImpl(narrowByKey(events), events.rebuild _, cp, 0L)
-  def detections(events: EventStream, cp: CompiledPattern, stateTtl: Long): Dataset[Detection] =
-    detectionsImpl(narrowByKey(events), events.rebuild _, cp, stateTtl)
-
-  private def detectionsImpl[E](
-      grouped: org.apache.spark.sql.KeyValueGroupedDataset[String, E],
-      rebuild: E => CEvent,
-      cp: CompiledPattern,
-      stateTtl: Long): Dataset[Detection] = {
+  private[spark] def keyed[S: Encoder, O: Encoder](events: Ingest, stateTtl: Long = 0L)(
+      mkRun: String => KeyedRun[S, O]): Dataset[O] = {
+    val in = events.narrow
+    val rebuild = in.rebuild
     val timeoutConf =
       if (stateTtl > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    grouped
-      .flatMapGroupsWithState[DetRunState, Detection](
-        OutputMode.Append, timeoutConf) {
-        (key: String, rows: Iterator[E], state: GroupState[DetRunState]) =>
+    in.byKey
+      .flatMapGroupsWithState[S, O](OutputMode.Append, timeoutConf) {
+        (key: String, rows: Iterator[in.Row], state: GroupState[S]) =>
           if (state.hasTimedOut) {
             state.remove() // stale run reclaimed
             Iterator.empty
           } else {
-            val run = new DetRun(cp, key)
+            val run = mkRun(key)
             state.getOption.foreach(run.restore)
-            val out = sortedEvents(rows, rebuild).toSeq.flatMap(run.step)
+            val out = sortedEvents(rows.map(rebuild)).toSeq.flatMap(run.step)
             state.update(run.snapshot)
             if (stateTtl > 0) state.setTimeoutDuration(stateTtl)
             out.iterator
@@ -119,68 +68,44 @@ object Stream {
       }
   }
 
+  /** One group's events in (timestamp, id) order — the intra-batch total
+    * order automaton determinism requires. */
+  private[spark] def sortedEvents(rows: Iterator[CEvent]): Array[CEvent] = {
+    val arr = rows.toArray
+    java.util.Arrays.sort(arr, (a: CEvent, b: CEvent) => {
+      val c = java.lang.Long.compare(a.timestamp, b.timestamp)
+      if (c != 0) c else java.lang.Long.compare(a.id, b.id)
+    })
+    arr
+  }
+
+  /** Deterministic detection-point stream (R1 over the streaming SDFA);
+    * `stateTtl` as in [[keyed]]. */
+  def detections(
+      events: Ingest,
+      cp: CompiledPattern,
+      stateTtl: Long = 0L): Dataset[Detection] =
+    keyed(events, stateTtl)(new DetRun(cp, _))
+
   /** C10 deterministic register-pattern stream: the DSRA hyper-state
     * (configuration set + valuations + window anchors) lives in GroupState, mirroring the
     * reference's DSRAStreaming Configuration payloads.
     */
-  def detectionsDsra(events: Dataset[CEvent], cp: CompiledPattern): Dataset[Detection] =
-    detectionsDsraImpl(narrowByKey(events), NarrowEvent.rebuild _, cp)
-
-  /** [[EventStream]] (narrow-ingest) face of [[detectionsDsra]]. */
-  def detectionsDsra(events: EventStream, cp: CompiledPattern): Dataset[Detection] =
-    detectionsDsraImpl(narrowByKey(events), events.rebuild _, cp)
-
-  private def detectionsDsraImpl[E](
-      grouped: org.apache.spark.sql.KeyValueGroupedDataset[String, E],
-      rebuild: E => CEvent,
-      cp: CompiledPattern): Dataset[Detection] = {
-    implicit val dsraStateEnc: Encoder[DsraRunState] = Encoders.product[DsraRunState]
-    grouped
-      .flatMapGroupsWithState[DsraRunState, Detection](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[E], state: GroupState[DsraRunState]) =>
-          val run = new DsraRun(cp, key)
-          state.getOption.foreach(run.restore)
-          val out = sortedEvents(rows, rebuild).toSeq.flatMap(run.step)
-          state.update(run.snapshot)
-          out.iterator
-      }
-  }
+  def detectionsDsra(events: Ingest, cp: CompiledPattern): Dataset[Detection] =
+    keyed(events)(new DsraRun(cp, _))
 
   /** Full match-enumeration stream (R4): thread pool lives in GroupState,
     * like the reference's run pool registered per (fsmId, partition value)
     * (ERFEngine.scala:230-266, RunPool.scala:33-211).
     */
   def matches(
-      events: Dataset[CEvent],
+      events: Ingest,
       cp: CompiledPattern,
       maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] =
-    matchesImpl(narrowByKey(events), NarrowEvent.rebuild _, cp, maxThreads)
-
-  /** [[EventStream]] (narrow-ingest) face of [[matches]]. */
-  def matches(events: EventStream, cp: CompiledPattern): Dataset[MatchOut] =
-    matchesImpl(narrowByKey(events), events.rebuild _, cp, MatchRun.DefaultMaxThreads)
-  def matches(events: EventStream, cp: CompiledPattern, maxThreads: Int): Dataset[MatchOut] =
-    matchesImpl(narrowByKey(events), events.rebuild _, cp, maxThreads)
-
-  private def matchesImpl[E](
-      grouped: org.apache.spark.sql.KeyValueGroupedDataset[String, E],
-      rebuild: E => CEvent,
-      cp: CompiledPattern,
-      maxThreads: Int): Dataset[MatchOut] =
-    grouped
-      .flatMapGroupsWithState[MatchRunState, MatchOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[E], state: GroupState[MatchRunState]) =>
-          val run = new MatchRun(cp, key, maxThreads)
-          state.getOption.foreach(run.restore)
-          val out = sortedEvents(rows, rebuild).toSeq.flatMap(run.step)
-          state.update(run.snapshot)
-          out.iterator
-      }
+    keyed(events)(new MatchRun(cp, _, maxThreads))
 
   /** F5 through the streaming engine: the forecasting runtime
-    * ([[RestorableSpstRun]] — DetRun 4-tuple + SPST symbol buffer) with
+    * ([[SpstRun]] — DetRun 4-tuple + SPST symbol buffer) with
     * its state round-tripping through GroupState at every micro-batch
     * boundary, the same keyed-stateful shape as [[detections]]
     * (reference: the Flink engine emits forecasts from the identical
@@ -189,46 +114,12 @@ object Stream {
     * model-sized immutable values, exactly like the compiled pattern.
     */
   def forecasts(
-      events: Dataset[CEvent],
+      events: Ingest,
       cp: CompiledPattern,
       spst: Spst,
       table: Map[(List[Int], Int), ForecastInterval]): Dataset[ForecastOut] =
-    forecastsImpl(narrowByKey(events), NarrowEvent.rebuild _, cp, spst, table)
+    keyed(events)(new ForecastRun(cp, spst, table, _))
 
-  /** [[EventStream]] (narrow-ingest) face of [[forecasts]]. */
-  def forecasts(
-      events: EventStream,
-      cp: CompiledPattern,
-      spst: Spst,
-      table: Map[(List[Int], Int), ForecastInterval]): Dataset[ForecastOut] =
-    forecastsImpl(narrowByKey(events), events.rebuild _, cp, spst, table)
-
-  private def forecastsImpl[E](
-      grouped: org.apache.spark.sql.KeyValueGroupedDataset[String, E],
-      rebuild: E => CEvent,
-      cp: CompiledPattern,
-      spst: Spst,
-      table: Map[(List[Int], Int), ForecastInterval]): Dataset[ForecastOut] = {
-    implicit val fEnc: Encoder[ForecastOut] = Encoders.product[ForecastOut]
-    implicit val stEnc: Encoder[SpstStreamState] = Encoders.product[SpstStreamState]
-    grouped
-      .flatMapGroupsWithState[SpstStreamState, ForecastOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[E], state: GroupState[SpstStreamState]) =>
-          val run = new RestorableSpstRun(cp, spst, table, key)
-          state.getOption.foreach(s => run.restore(s.det, s.buffer))
-          val out = sortedEvents(rows, rebuild).toSeq.flatMap(e => run.step(e)._2)
-          state.update(SpstStreamState(run.detSnapshot, run.bufferSnapshot))
-          out.iterator
-      }
-  }
-
-  /** The same deterministic runtime on Spark 4's transformWithState
-    * operator — the successor to flatMapGroupsWithState (typed state
-    * variables, native TTL, RocksDB-only backend). Functionally identical
-    * to [[detections]]; both are kept because transformWithState requires
-    * the RocksDB state store while flatMapGroupsWithState runs anywhere.
-    */
   /** F5 for REGISTER patterns (C10×F2): the DSRA hyper-state
     * (configuration set + valuations + anchors) plus the SPSTm symbol
     * buffer round-trip GroupState at every micro-batch boundary. Each
@@ -239,117 +130,31 @@ object Stream {
     * SPSTm forecast table — the register-pattern face of [[forecasts]].
     */
   def forecastsSpstm(
-      events: Dataset[CEvent],
+      events: Ingest,
       cp: CompiledPattern,
       m: SpstM,
       table: Map[(List[Int], Int), ForecastInterval],
-      grid: Long = 0L): Dataset[ForecastOut] =
-    forecastsSpstmImpl(narrowByKey(events), NarrowEvent.rebuild _, cp, m, table, grid)
-
-  /** [[EventStream]] (narrow-ingest) face of [[forecastsSpstm]]. */
-  def forecastsSpstm(
-      events: EventStream,
-      cp: CompiledPattern,
-      m: SpstM,
-      table: Map[(List[Int], Int), ForecastInterval],
-      grid: Long): Dataset[ForecastOut] =
-    forecastsSpstmImpl(narrowByKey(events), events.rebuild _, cp, m, table, grid)
-
-  private def forecastsSpstmImpl[E](
-      grouped: org.apache.spark.sql.KeyValueGroupedDataset[String, E],
-      rebuild: E => CEvent,
-      cp: CompiledPattern,
-      m: SpstM,
-      table: Map[(List[Int], Int), ForecastInterval],
-      grid: Long): Dataset[ForecastOut] = {
-    implicit val fEnc: Encoder[ForecastOut] = Encoders.product[ForecastOut]
-    implicit val stEnc: Encoder[SpstmStreamState] = Encoders.product[SpstmStreamState]
-    val timeWindowed = cp.windowKind == WindowKind.Time
-    if (timeWindowed) require(grid > 0L && cp.window % grid == 0L,
-      s"time-windowed symbolization needs a grid tiling the window, got $grid")
-    else require(grid == 0L, "grid applies to time-windowed patterns")
-    val cells: Int = (if (timeWindowed) cp.window / grid else cp.window).toInt
-    grouped
-      .flatMapGroupsWithState[SpstmStreamState, ForecastOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[E], state: GroupState[SpstmStreamState]) =>
-          val run = new DsraRun(cp, key)
-          val buffer = new SymbolBuffer(math.max(1, m.order))
-          state.getOption.foreach { s => run.restore(s.dsra); buffer.restore(s.buffer) }
-          val out = sortedEvents(rows, rebuild).toSeq.flatMap { e =>
-            if (e.isReset) { run.step(e); buffer.clear(); None }
-            else {
-              val det = run.step(e)
-              val counter = run.eventCounter
-              val anchor = run.newestTakenAnchor
-              val sym =
-                if (det.isDefined) SpstM.SymD
-                else if (run.tookAnchorThisStep) SpstM.SymA
-                else SpstM.SymO
-              val st =
-                if (anchor < 0) cells
-                else if (timeWindowed) math.min((e.timestamp - anchor) / grid, cells.toLong).toInt
-                else math.min(counter - anchor, cells.toLong).toInt
-              buffer.push(sym)
-              if (buffer.isFull) {
-                val label = m.pst.nodeFor(buffer.pop).label
-                table.get((label, st)).filter(_.isValid).map { fi =>
-                  ForecastOut(key, counter, e.id, e.timestamp,
-                    counter + fi.start, counter + fi.end, fi.prob, fi.positive)
-                }
-              } else None
-            }
-          }
-          state.update(SpstmStreamState(run.snapshot, buffer.snapshot))
-          out.iterator
-      }
+      grid: Long = 0L): Dataset[ForecastOut] = {
+    val symbolizer = SpstmSymbolizer.perKey(cp, grid)
+    keyed(events)(key => new SpstmForecastRun(m, table, symbolizer(key)))
   }
 
+  /** The same deterministic runtime on Spark 4's transformWithState
+    * operator — the successor to flatMapGroupsWithState (typed state
+    * variables, native TTL, RocksDB-only backend). Functionally identical
+    * to [[detections]]; both are kept because transformWithState requires
+    * the RocksDB state store while flatMapGroupsWithState runs anywhere.
+    */
   def detectionsTws(
-      events: Dataset[CEvent],
+      events: Ingest,
       cp: CompiledPattern,
       stateTtl: Long = 0L): Dataset[Detection] = {
     // Spark 4 rejects TTLConfig outside ProcessingTime mode
     // (StatefulProcessorHandleImpl.validateTTLConfig)
     val timeMode = if (stateTtl > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    narrowByKey(events)
-      .transformWithState(
-        new DetProcessor(cp, stateTtl, NarrowEvent.rebuild _), timeMode, OutputMode.Append())
-  }
-
-  /** [[EventStream]] (narrow-ingest) face of [[detectionsTws]]. */
-  def detectionsTws(events: EventStream, cp: CompiledPattern): Dataset[Detection] = {
-    narrowByKey(events)
-      .transformWithState(
-        new DetProcessor[NEvent](cp, 0L, events.rebuild _), TimeMode.None(), OutputMode.Append())
-  }
-}
-
-/** Shuffle-side representation of [[graft.cef.CEvent]]: the attr maps as
-  * parallel key/value arrays (see [[Stream.narrowByKey]] — Catalyst's
-  * generic Map codec around the keyed-state exchange was the measured
-  * throughput wall of the whole streaming path). Rebuilt to CEvent once
-  * per row, post-shuffle.
-  */
-private[spark] final case class NarrowEvent(
-    id: Long,
-    eventType: String,
-    timestamp: Long,
-    partition: String,
-    numK: Array[String],
-    numV: Array[Double],
-    strK: Array[String],
-    strV: Array[String])
-
-private[spark] object NarrowEvent {
-  def rebuild(n: NarrowEvent): CEvent = {
-    var num = Map.empty[String, Double]
-    var i = 0
-    while (i < n.numK.length) { num = num.updated(n.numK(i), n.numV(i)); i += 1 }
-    var str = Map.empty[String, String]
-    i = 0
-    while (i < n.strK.length) { str = str.updated(n.strK(i), n.strV(i)); i += 1 }
-    CEvent(n.id, n.eventType, n.timestamp, n.partition, num, str)
+    val in = events.narrow
+    in.byKey.transformWithState(
+      new DetProcessor[in.Row](cp, stateTtl, in.rebuild), timeMode, OutputMode.Append())
   }
 }
 
@@ -363,6 +168,46 @@ final case class SpstStreamState(det: DetRunState, buffer: Seq[Int])
   * snapshot + the most-recent-first SPSTm symbol buffer.
   */
 final case class SpstmStreamState(dsra: DsraRunState, buffer: Seq[Int])
+
+/** The keyed run of [[Stream.forecasts]] (and the batch `Train.forecasts`):
+  * an [[SpstRun]] emitting its forecasts. */
+private[spark] final class ForecastRun(
+    cp: CompiledPattern,
+    spst: Spst,
+    table: Map[(List[Int], Int), ForecastInterval],
+    key: String) extends KeyedRun[SpstStreamState, ForecastOut] {
+
+  private val run = new SpstRun(cp, spst, table, key)
+
+  def restore(s: SpstStreamState): Unit = run.restore(s.det, s.buffer)
+  def snapshot: SpstStreamState = SpstStreamState(run.detSnapshot, run.bufferSnapshot)
+  def step(e: CEvent): Option[ForecastOut] = run.step(e)._2
+}
+
+/** The keyed run of [[Stream.forecastsSpstm]]: the SPSTm symbolizer plus
+  * the symbol buffer whose PST label and the symbolizer's abstract state
+  * index the forecast table. */
+private final class SpstmForecastRun(
+    m: SpstM,
+    table: Map[(List[Int], Int), ForecastInterval],
+    symbols: SpstmSymbolizer) extends KeyedRun[SpstmStreamState, ForecastOut] {
+
+  private val buffer = new SymbolBuffer(math.max(1, m.order))
+
+  def restore(s: SpstmStreamState): Unit = { symbols.restore(s.dsra); buffer.restore(s.buffer) }
+  def snapshot: SpstmStreamState = SpstmStreamState(symbols.snapshot, buffer.snapshot)
+
+  def step(e: CEvent): Option[ForecastOut] =
+    if (e.isReset) { symbols.step(e); buffer.clear(); None }
+    else symbols.step(e).flatMap { s =>
+      buffer.push(s.symbol)
+      if (!buffer.isFull) None
+      else table.get((m.pst.nodeFor(buffer.pop).label, s.state)).filter(_.isValid).map { fi =>
+        ForecastOut(s.partition, s.counter, e.id, e.timestamp,
+          s.counter + fi.start, s.counter + fi.end, fi.prob, fi.positive)
+      }
+    }
+}
 
 /** StatefulProcessor wrapping [[DetRun]]: the run snapshot lives in a typed
   * ValueState with optional native TTL (K5 run-pool expiry).
@@ -384,12 +229,7 @@ final class DetProcessor[E](cp: CompiledPattern, stateTtl: Long, rebuild: E => C
       timerValues: TimerValues): Iterator[Detection] = {
     val run = new DetRun(cp, key)
     Option(state.get()).foreach(run.restore)
-    val arr = rows.map(rebuild).toArray
-    java.util.Arrays.sort(arr, (a: CEvent, b: CEvent) => {
-      val c = java.lang.Long.compare(a.timestamp, b.timestamp)
-      if (c != 0) c else java.lang.Long.compare(a.id, b.id)
-    })
-    val out = arr.toSeq.flatMap(run.step)
+    val out = Stream.sortedEvents(rows.map(rebuild)).toSeq.flatMap(run.step)
     state.update(run.snapshot)
     out.iterator
   }

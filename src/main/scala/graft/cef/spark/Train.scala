@@ -30,22 +30,16 @@ object Train {
   /** Count symbol windows of length ≤ maxLen per partition key. */
   def countWindows(events: Dataset[CEvent], cp: CompiledPattern, maxLen: Int): Dataset[WindowCount] = {
     val iso = cp.iso
-    events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var key: String = null
-        var buf: SymbolBuffer = null
-        rows.flatMap { e =>
-          if (e.partition != key) { key = e.partition; buf = new SymbolBuffer(maxLen) }
-          if (e.isReset) { buf.clear(); Iterator.empty }
-          else {
-            val sym = iso.evaluate(e)
-            if (sym < 0) Iterator.empty
-            else { buf.push(sym); Iterator.single(SymbolWindow(buf.pop)) }
-          }
+    Detect.perKeyScan(events) { _ =>
+      val buf = new SymbolBuffer(maxLen)
+      e =>
+        if (e.isReset) { buf.clear(); None }
+        else {
+          val sym = iso.evaluate(e)
+          if (sym < 0) None
+          else { buf.push(sym); Some(SymbolWindow(buf.pop)) }
         }
-      }
+    }
       .groupBy(col("word"))
       .agg(count(lit(1)).as("n"))
       .as[WindowCount]
@@ -210,26 +204,20 @@ object Train {
   def countTransitions(events: Dataset[CEvent], sdfa: Sdfa): Dataset[((Int, Int), Long)] = {
     implicit val kvEnc: Encoder[((Int, Int), Long)] =
       Encoders.tuple(pairEnc, Encoders.scalaLong)
-    events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var key: String = null
-        var state = sdfa.start
-        rows.flatMap { e =>
-          if (e.partition != key) { key = e.partition; state = sdfa.start }
-          if (e.isReset) { state = sdfa.start; Iterator.empty }
+    Detect.perKeyScan(events) { _ =>
+      var state = sdfa.start
+      e =>
+        if (e.isReset) { state = sdfa.start; None }
+        else {
+          val sym = sdfa.iso.evaluate(e)
+          if (sym < 0) None
           else {
-            val sym = sdfa.iso.evaluate(e)
-            if (sym < 0) Iterator.empty
-            else {
-              val prev = state
-              state = sdfa.delta(prev)(sym)
-              Iterator.single((prev, state))
-            }
+            val prev = state
+            state = sdfa.delta(prev)(sym)
+            Some((prev, state))
           }
         }
-      }
+    }
       .groupByKey(identity)
       .count()
   }
@@ -253,50 +241,39 @@ object Train {
     val depth = (if (reachable.isEmpty) 1 else reachable.max + 1).max(1)
     implicit val tripleEnc: Encoder[(Int, Int, Int)] =
       Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
-    val counts = events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var key: String = null
-        var state = sdfa.start
-        var symBuf: Array[Int] = null
-        var stBuf: Array[Int] = null
-        var len = 0
-        def clear(): Unit = { state = sdfa.start; len = 0 }
-        rows.flatMap { e =>
-          if (e.partition != key) {
-            key = e.partition
-            symBuf = new Array[Int](depth); stBuf = new Array[Int](depth)
-            clear()
-          }
-          if (e.isReset) { clear(); Iterator.empty }
+    val counts = Detect.perKeyScan(events) { _ =>
+      var state = sdfa.start
+      val symBuf = new Array[Int](depth)
+      val stBuf = new Array[Int](depth)
+      var len = 0
+      e =>
+        if (e.isReset) { state = sdfa.start; len = 0; Nil }
+        else {
+          val sym = sdfa.iso.evaluate(e)
+          if (sym < 0) Nil
           else {
-            val sym = sdfa.iso.evaluate(e)
-            if (sym < 0) Iterator.empty
-            else {
-              state = sdfa.delta(state)(sym)
-              if (len == depth) {
-                System.arraycopy(symBuf, 1, symBuf, 0, depth - 1)
-                System.arraycopy(stBuf, 1, stBuf, 0, depth - 1)
-                len -= 1
-              }
-              symBuf(len) = sym; stBuf(len) = state; len += 1
-              if (sdfa.isFinal(state)) {
-                // one training sequence: pi + transition + emission counts
-                val out = List.newBuilder[(Int, Int, Int)]
-                out += ((0, symBuf(0), 0))
-                var i = 0
-                while (i < len) {
-                  out += ((2, symBuf(i), stBuf(i)))
-                  if (i > 0) out += ((1, symBuf(i - 1), symBuf(i)))
-                  i += 1
-                }
-                out.result().iterator
-              } else Iterator.empty
+            state = sdfa.delta(state)(sym)
+            if (len == depth) {
+              System.arraycopy(symBuf, 1, symBuf, 0, depth - 1)
+              System.arraycopy(stBuf, 1, stBuf, 0, depth - 1)
+              len -= 1
             }
+            symBuf(len) = sym; stBuf(len) = state; len += 1
+            if (sdfa.isFinal(state)) {
+              // one training sequence: pi + transition + emission counts
+              val out = List.newBuilder[(Int, Int, Int)]
+              out += ((0, symBuf(0), 0))
+              var i = 0
+              while (i < len) {
+                out += ((2, symBuf(i), stBuf(i)))
+                if (i > 0) out += ((1, symBuf(i - 1), symBuf(i)))
+                i += 1
+              }
+              out.result()
+            } else Nil
           }
         }
-      }
+    }
       .groupByKey(x => x)
       .count()
       .collect() // model-sized: ≤ |Σ| + |Σ|² + |Σ|·|Q| distinct keys
@@ -334,7 +311,7 @@ object Train {
   }
 
   /** Run SPST forecasting + detection over events (batch): per-key
-    * [[SpstRun]] with the same secondary-sort scan as [[Detect]].
+    * [[SpstRun]] forecasts through the [[Detect]] batch scan.
     */
   def forecasts(
       events: Dataset[CEvent],
@@ -346,17 +323,7 @@ object Train {
       horizon: Int): Dataset[ForecastOut] = {
     implicit val fEnc: Encoder[ForecastOut] = Encoders.product[ForecastOut]
     val table = spst.forecastTable(method, threshold, spread, horizon)
-    events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var key: String = null
-        var run: SpstRun = null
-        rows.flatMap { e =>
-          if (e.partition != key) { key = e.partition; run = new SpstRun(cp, spst, table, key) }
-          run.step(e)._2.iterator
-        }
-      }
+    Detect.perKeyScan(events)(Detect.freshRuns(new ForecastRun(cp, spst, table, _)))
   }
 }
 

@@ -614,12 +614,20 @@ object TextOps {
               org.apache.spark.sql.functions.col("state"))),
           org.apache.spark.sql.functions.lit(0L))).head()
       val (n, chars) = (g.getLong(0), g.getLong(1))
-      if (n <= localVocabMax && chars <= localVocabMax * 40L) {
+      if (bpeLocalFits(n, chars, localVocabMax)) {
         val arr = words.collect().map(r => (r.getString(0), r.getLong(1)))
         org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(words)
         Some(arr)
       } else None
     }
+
+  /** The local-path gate: at most `localVocabMax` rows and 40 chars per
+    * row on average. The byte budget is compared without forming
+    * `localVocabMax * 40` when that product would overflow: any `Long`
+    * char count fits such a budget.
+    */
+  private[graft] def bpeLocalFits(n: Long, chars: Long, localVocabMax: Long): Boolean =
+    n <= localVocabMax && (localVocabMax > Long.MaxValue / 40L || chars <= localVocabMax * 40L)
 
   /** The driver-local merge loop — the exact round/acceptance structure
     * of [[bpeMergesBatchedCore]] over an in-memory vocabulary. Per

@@ -83,4 +83,18 @@ class BpeLocalSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     // and the winner must be the UTF-8-smaller symbol, FULLWIDTH !
     local.head._2 shouldBe "！"
   }
+
+  it should "gate the local path without overflowing the char budget" in {
+    // 40 chars per row on average, compared exactly where 40 × max fits
+    TextOps.bpeLocalFits(n = 1, chars = 40, localVocabMax = 1) shouldBe true
+    TextOps.bpeLocalFits(n = 1, chars = 41, localVocabMax = 1) shouldBe false
+    TextOps.bpeLocalFits(n = 2, chars = 0, localVocabMax = 1) shouldBe false
+    val edge = Long.MaxValue / 40L
+    TextOps.bpeLocalFits(n = 1, chars = edge * 40L, localVocabMax = edge) shouldBe true
+    TextOps.bpeLocalFits(n = 1, chars = edge * 40L + 1, localVocabMax = edge) shouldBe false
+    // Long.MaxValue * 40 wraps negative, which used to turn the path off
+    TextOps.bpeLocalFits(n = 1, chars = 10, localVocabMax = Long.MaxValue) shouldBe true
+    TextOps.bpeLocalFits(n = 1, chars = Long.MaxValue, localVocabMax = Long.MaxValue) shouldBe true
+    TextOps.bpeLocalFits(n = 1, chars = 10, localVocabMax = edge + 1) shouldBe true
+  }
 }

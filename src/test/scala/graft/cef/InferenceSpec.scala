@@ -102,4 +102,46 @@ class InferenceSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     mcc should (be >= -1.0 and be <= 1.0)
     q.stop()
   }
+
+  it should "produce the same rows whether the stream arrives in one micro-batch or six" in {
+    val sparkS = spark
+    import sparkS.implicits._
+    val train = (1 to 200).map(i => ev(i.toLong, if (i % 2 == 0) "b" else "a", i.toLong))
+    val spst = InMemory.train(train, cp, order = 1, pMin = 0.001, gammaMin = 0.001)
+    val tables = Map(
+      0 -> spst.forecastTable(ForecastMethod.ClassifyNextK, 0.3, 10, 20),
+      1 -> spst.forecastTable(ForecastMethod.ClassifyNextK, 0.6, 5, 20))
+    // two interleaved keys, each alternating a/b, event time step 10
+    val events = (1 to 300).map { i =>
+      ev(i.toLong, if ((i - 1) / 2 % 2 == 0) "a" else "b", i * 10L, key = s"k${i % 2}")
+    }
+    def run(name: String, batches: Int, swapTo: Option[Int]): Map[Inference.Out, Int] = {
+      val controls = new Inference.ControlHandle
+      swapTo.foreach(id => controls.push(SyncCommand.play(0L, id)))
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[CEvent]
+      // each key arms the swap at its first event and takes it 700 later:
+      // past the first 50-event batch (span 490), so in the six-batch run
+      // the swap is still pending at a batch boundary; reports every 200
+      // put several report points inside each batch
+      val q = Inference.engine(mem.toDS(), cp, id => (spst, tables(id)), controls,
+        swapDelay = 700L, reportingDistance = 200L)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      events.grouped(events.size / batches).foreach { chunk =>
+        mem.addData(chunk)
+        q.processAllAvailable()
+      }
+      q.stop()
+      spark.table(name).as[Inference.Out].collect().groupBy(identity).map {
+        case (row, rows) => row -> rows.length
+      }
+    }
+    val one = run("carry_one", batches = 1, swapTo = Some(1))
+    val six = run("carry_six", batches = 6, swapTo = Some(1))
+    one.keySet.map(_.kind) shouldBe Set("detection", "forecast", "report")
+    one.keySet.filter(_.kind == "report").map(_.partition) shouldBe Set("k0", "k1")
+    six shouldBe one
+    // and the swap itself changed what the engine emitted
+    run("carry_noswap", batches = 1, swapTo = None) should not equal one
+  }
 }
